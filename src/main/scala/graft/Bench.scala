@@ -1,20 +1,11 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.tools.{HarnessConf, PeakHeap}
 object Bench {
 
-  private def newSession(cpus: String, sfDir: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // scale-conditional stability tuning (round-15 heap-margin
-      // campaign + round-16 floor attribution) — see HarnessConf
-      .config(graft.tools.HarnessConf.tuning(sfDir))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  /** Post-GC footprint (GB) at or above which "auto" mode forces the
+    * inter-query System.gc() — see the policy note in main. */
+  private val ForceGcGb = 1.5
 
   /** Pre-warm the JVM so the first timed query isn't charged one-time
     * startup: codegen pipeline, parquet reader, and the streaming
@@ -72,7 +63,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = HarnessConf.cpus
     // Recycle the SparkContext every N queries. The registry holds 160+
     // MUTUALLY UNRELATED workloads; a single long-lived local context
     // accumulates cross-query residue a real deployment never sees in
@@ -98,32 +89,18 @@ object Bench {
     val repeats = sys.env.getOrElse("GRAFT_BENCH_REPEATS", "2").toInt.max(1)
     val repeatThreshold =
       sys.env.getOrElse("GRAFT_BENCH_REPEAT_THRESHOLD", "1.0").toDouble
-    // A/B gates for floor-attribution experiments (round-16 advice #1):
-    // GRAFT_PEAKHEAP=off skips the heap listener+sampler entirely;
-    // GRAFT_FORCE_GC controls the inter-query System.gc(): "always"
-    // (round-15 behavior), "off", or "auto" (only after a query whose
-    // measured post-GC footprint says broadcast/checkpoint residue is
-    // actually worth collecting). The DEFAULT is scale-conditional
-    // both ways: "auto" on floor fixtures (the per-query Full GC
-    // clears weak/soft codegen+footer caches — measured sf0.1 tax),
-    // "always" on big fixtures (deterministic broadcast reclamation —
-    // auto-mode ×100 sweeps measured +10-16% on shared queries and
-    // the always-GC mode is the round-15 OOM protection).
-    val peakHeapOn = sys.env.getOrElse("GRAFT_PEAKHEAP", "on") != "off"
-    val forceGcMode = sys.env.getOrElse("GRAFT_FORCE_GC",
-      if (graft.tools.HarnessConf.isBigFixture(sfDir)) "always"
-      else "auto")
-    // Interleaved-sweep mode for ambient-pressure attribution
-    // (round-16 advice #1): GRAFT_BENCH_PASSES=N runs the WHOLE
-    // registry N times inside ONE session, so slow ambient drift
-    // (page-cache erosion, heap wear, JIT state) shows up as a
-    // within-session pass-over-pass slope on identical code, instead
-    // of hiding in between-run noise. The stdout contract is
-    // unchanged (per-query min over passes); the per-pass maps go to
-    // a BENCH_PASSES.json sidecar.
-    val passes = sys.env.getOrElse("GRAFT_BENCH_PASSES", "1").toInt.max(1)
-    var spark = newSession(cpus, sfDir)
-    if (peakHeapOn) graft.tools.PeakHeap.install(spark.sparkContext)
+    // Inter-query System.gc() policy, scale-conditional: "auto" on
+    // floor fixtures forces it only after a query whose measured
+    // post-GC footprint says broadcast/checkpoint residue is actually
+    // worth collecting (the per-query Full GC clears weak/soft
+    // codegen+footer caches — measured sf0.1 tax); "always" on big
+    // fixtures (deterministic broadcast reclamation — auto-mode ×100
+    // sweeps measured +10-16% on shared queries and the always-GC
+    // mode is the round-15 OOM protection).
+    val forceGcMode =
+      if (HarnessConf.isBigFixture(sfDir)) "always" else "auto"
+    var spark = HarnessConf.session(sfDir)
+    PeakHeap.install(spark.sparkContext)
     // per-query peak-heap observations for the SCALE.md margin table;
     // written to a BENCH_HEAP.json sidecar, never the stdout contract.
     // Fields: (query, post-GC peak GB, peak stage, post-forced-GC
@@ -155,15 +132,14 @@ object Bench {
     var sinceRecycle = 0
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
-    val passResults = (1 to passes).map { pass =>
-      pass -> selected.map {
+    val results = selected.map {
       case (name, fn) =>
         if (sinceRecycle >= recycleEvery) {
           spark.stop()
           SparkSession.clearActiveSession()
           SparkSession.clearDefaultSession()
-          spark = newSession(cpus, sfDir)
-          if (peakHeapOn) graft.tools.PeakHeap.install(spark.sparkContext)
+          spark = HarnessConf.session(sfDir)
+          PeakHeap.install(spark.sparkContext)
           // re-warm the fresh context: table scans (empty block manager,
           // cold footer caches) plus the streaming machinery; JIT and
           // the codegen cache persist across recycles for free
@@ -172,22 +148,11 @@ object Bench {
           sinceRecycle = 0
         }
         sinceRecycle += 1
-        // Queries are independent: release each run's localCheckpoint /
-        // persist blocks and its memory-sink temp views before the next
-        // one. Without this, ~80 queries' worth of checkpoint blocks
-        // accumulate in storage memory and later queries run
-        // execution-memory-starved (measured 3-5x inflation on the heavy
-        // text queries late in the run).
+        // Queries are independent: release each run's blocks and temp
+        // views before the next one (HarnessConf.cleanup), then apply
+        // the inter-query GC policy.
         def cleanup(): Double = {
-          graft.operators.PrefixPass.releaseAll()
-          // BLOCKING unpersist (round 15): with unpersist(false) the
-          // next query starts allocating while the previous query's
-          // multi-GB checkpoint blocks are still draining — measured
-          // as the q245→q247 in-context hard OOM at ×100 (two copies
-          // of the corpus shingle table alive at once)
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(true))
-          spark.sharedState.cacheManager.clearCache()
+          HarnessConf.cleanup(spark)
           // Broadcast blocks are reclaimed by ContextCleaner only
           // after a GC collects their driver references; without a
           // forced GC, seven heavy dedup/BPE queries' broadcasts were
@@ -200,30 +165,20 @@ object Bench {
           // when the query's measured post-GC footprint says there is
           // actually multi-GB residue worth collecting — heavy ×100
           // queries still get their GC, sub-second queries don't.
-          val gcNow = forceGcMode match {
-            case "always" => true
-            case "off"    => false
-            case _ => // auto: measured-footprint gate
-              !peakHeapOn || graft.tools.PeakHeap.postGcPeakGb >=
-                sys.env.getOrElse("GRAFT_FORCE_GC_GB", "1.5").toDouble
-          }
+          val gcNow = forceGcMode == "always" ||
+            PeakHeap.postGcPeakGb >= ForceGcGb
           // post-forced-GC floor (round-16 advice #3): what is STILL
           // live after the harness collects everything collectable —
           // the true OOM-margin number a saturated post-GC peak
           // over-states. -1 when the gc was skipped (auto mode,
           // footprint under the gate).
-          val floor = if (gcNow) {
+          if (gcNow) {
             System.gc()
-            graft.tools.PeakHeap.heapUsedNowGb
+            PeakHeap.heapUsedNowGb
           } else -1.0
-          try spark.catalog.listTables().collect()
-            .filter(t => t.name.startsWith("graft_"))
-            .foreach(t => spark.catalog.dropTempView(t.name))
-          catch { case _: Throwable => () }
-          floor
         }
         def once(): (Double, Boolean) = {
-          if (peakHeapOn) graft.tools.PeakHeap.reset()
+          PeakHeap.reset()
           graft.operators.DedupQueries.drainCensusLog() // stale entries
           val t0 = System.nanoTime()
           val ok = try { fn(spark, sfDir).count(); true }
@@ -236,8 +191,7 @@ object Bench {
           if (censuses.nonEmpty) censusObs.synchronized {
             censusObs(name) = censuses
           }
-          val (pk, st) = (graft.tools.PeakHeap.postGcPeakGb,
-            graft.tools.PeakHeap.postGcPeakStage)
+          val (pk, st) = (PeakHeap.postGcPeakGb, PeakHeap.postGcPeakStage)
           val floor = cleanup()
           heapObs.synchronized {
             // keep the MAX observation per query across repeat runs
@@ -269,18 +223,8 @@ object Bench {
         // stopping the context) still identifies the query that died;
         // the stdout JSON contract is untouched
         System.err.println(
-          f"[bench] p$pass $name $dt%.2f s ok=${good.nonEmpty}")
+          f"[bench] $name $dt%.2f s ok=${good.nonEmpty}")
         (name, dt, good.nonEmpty)
-      }
-    }
-    // Stdout contract: per-query MIN over passes (each pass's value is
-    // already min-of-repeats); a query is "failed" only if it failed
-    // in EVERY pass.
-    val results = selected.map(_._1).map { name =>
-      val obs = passResults.map(_._2.find(_._1 == name).get)
-      val good = obs.filter(_._3)
-      if (good.nonEmpty) (name, good.map(_._2).min, true)
-      else (name, obs.map(_._2).min, false)
     }
     val canaryPost = canary(spark)
     def fmt(v: Double, dp: Int): String = s"%.${dp}f".format(v)
@@ -321,7 +265,7 @@ object Bench {
         }.mkString("\"census\":{", ",", "},") +
         s""""protocol":{"repeats":$repeats,""" +
         s""""repeat_threshold_s":$repeatThreshold,""" +
-        s""""passes":$passes,"recycle_every":$recycleEvery,""" +
+        s""""passes":1,"recycle_every":$recycleEvery,""" +
         s""""force_gc":"$forceGcMode","cpus":"$cpus"},""" +
         s""""fixture_fp":"$fixtureFp",""" +
         s""""value":${fmt(total, dp)},"sf":"$sfDir"}"""
@@ -336,24 +280,12 @@ object Bench {
       val heapLines = heapObs.sortBy(-_._2).map { case (n, pk, st, fl) =>
         f"""{"query":"$n","post_gc_peak_gb":$pk%.2f,""" +
           f""""post_forced_gc_floor_gb":$fl%.2f,""" +
-          f""""xmx_gb":${graft.tools.PeakHeap.xmxGb}%.2f,""" +
+          f""""xmx_gb":${PeakHeap.xmxGb}%.2f,""" +
           s""""peak_stage":"${esc(st)}"}"""
       }
       java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_HEAP.json"),
         (heapLines.mkString("\n") + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
-    if (passes > 1) try {
-      // one JSON line per pass: {"pass":i,"queries":{...},"total":t}
-      val passLines = passResults.map { case (pass, rs) =>
-        val qs = rs.map { case (k, v, _) =>
-          "\"" + k + "\":" + fmt(v, 3) }.mkString("{", ",", "}")
-        val tot = rs.collect { case (_, v, true) => v }.sum
-        s"""{"pass":$pass,"queries":$qs,"total":${fmt(tot, 3)}}"""
-      }
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("BENCH_PASSES.json"),
-        (passLines.mkString("\n") + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () }
     println(line(3))
     spark.stop()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.tools.HarnessConf
 
 /** Plan audit: prints the formatted physical plan for the named queries
   * (all with no args). Used to keep the plans honest — PushedFilters
@@ -15,13 +15,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = HarnessConf.session(sfDir)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       SparkEntry.queries.get(name).foreach { fn =>
@@ -30,6 +24,7 @@ object Explain {
         catch { case e: Throwable =>
           println(s"explain failed: ${e.getMessage}")
         }
+        HarnessConf.cleanup(spark)
       }
     }
     spark.stop()

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.tools.HarnessConf
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -8,20 +9,7 @@ object Verify {
     val sfDir = args(0)
     val outDir = args(1)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-      // scale-conditional stability tuning — see HarnessConf
-      .config(graft.tools.HarnessConf.tuning(sfDir))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    var spark = newSession()
+    var spark = HarnessConf.session(sfDir)
     new java.io.File(outDir).mkdirs()
     // recycle the context periodically for the same reason Bench does:
     // 160+ unrelated workloads through one long-lived local context
@@ -35,7 +23,7 @@ object Verify {
         spark.stop()
         SparkSession.clearActiveSession()
         SparkSession.clearDefaultSession()
-        spark = newSession()
+        spark = HarnessConf.session(sfDir)
         sinceRecycle = 0
       }
       sinceRecycle += 1
@@ -44,13 +32,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      graft.operators.PrefixPass.releaseAll()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.sharedState.cacheManager.clearCache()
-      try spark.catalog.listTables().collect()
-        .filter(t => t.name.startsWith("graft_"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
-      catch { case _: Throwable => () }
+      HarnessConf.cleanup(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

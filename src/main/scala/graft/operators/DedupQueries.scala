@@ -1299,13 +1299,10 @@ object DedupQueries {
   /** Replication census over a content-keyed frame (must carry `h` =
     * the content hash; pass the CHECKPOINTED membership frame so the
     * census reads cached slim rows, never the corpus): true → content
-    * grain. GRAFT_GRAIN_FORCE ∈ {content, doc} is the A/B escape
-    * hatch for grain measurements (SCALE.md round-19 table) and an
-    * ops override for corpora whose replication the operator knows
-    * better than the census; forceGrainForTest is the spec hook (env
-    * vars can't be set in-process). Absent both, ≥1.5× replication
-    * picks content grain — the 5%-rsd approximate distinct is safe at
-    * that cut (real corpora sit ~1× or many×, never the boundary). */
+    * grain. forceGrainForTest is the spec hook; absent it, ≥1.5×
+    * replication picks content grain — the 5%-rsd approximate
+    * distinct is safe at that cut (real corpora sit ~1× or many×,
+    * never the boundary). */
   private[graft] def contentGrainByCensus(keyed: DataFrame): Boolean = {
     val c = keyed
       .agg(count(lit(1)), approx_count_distinct(col("h"))).head()
@@ -1323,23 +1320,11 @@ object DedupQueries {
 
   private[graft] def censusDecision(
       nDocs: Long, nGroups: Long): Boolean = {
-    val contentGrain = forceGrainForTest.orElse(
-      sys.env.get("GRAFT_GRAIN_FORCE").map {
-        case "content" => true
-        case "doc"     => false
-        case other => throw new IllegalArgumentException(
-          s"GRAFT_GRAIN_FORCE must be 'content' or 'doc', got '$other'")
-      })
-      .getOrElse(nDocs * 2 >= nGroups * 3)
-    lastCensus.set((nDocs, nGroups, contentGrain))
+    val contentGrain =
+      forceGrainForTest.getOrElse(nDocs * 2 >= nGroups * 3)
     censusLog.add((nDocs, nGroups, contentGrain))
     contentGrain
   }
-
-  /** Last census decision (nDocs, nDistinctGroups, contentGrain) —
-    * observability for the SCALE.md grain table and the spec pin. */
-  private[graft] val lastCensus =
-    new java.util.concurrent.atomic.AtomicReference[(Long, Long, Boolean)]
 
   /** Every census decision since the last drain, in decision order —
     * the bench harness drains this per query and emits the decisions
@@ -2628,7 +2613,7 @@ object DedupQueries {
         // LshIndexQueries.signatures IS that kernel (same banding,
         // null-text and null-bh rows dropped; a null bh never
         // equi-joined into the output here anyway). The round-18
-        // stage breakdown (tools/Q251Prof) measured the old per-DOC
+        // stage breakdown (SCALE.md) measured the old per-DOC
         // pass at 38-50 s of the query's 39-51 s total at ×100 —
         // ~100 replicas per content, ~100× redundant minhash — and
         // its multi-GB doc-grain shingle lineage was also the

@@ -74,7 +74,7 @@ object LshIndexQueries {
     // through the projections INTO the parquet scan with the whole
     // signature tree substituted — 8 `element_at(graft_minhash(
     // graft_shingles(...)))` re-evaluations per scan row, measured
-    // 0.8 → 3.8 s on the kernel alone at sf0.1 (GrainProbe; the plan
+    // 0.8 → 3.8 s on the kernel alone at sf0.1 (SCALE.md; the plan
     // shows the inlined filter in the scan's DataFilters). q51's doc
     // branch is immune because its shingle table is checkpointed (a
     // hard barrier); here the aggregate is the barrier, and at ~1×

@@ -84,11 +84,10 @@ object LtrHoldoutQueries {
       // DISTINCT text and fan out through a slim (doc_id, th)
       // membership join — at ×100 (verbatim 100× replication) that is
       // ~replication× less regex work for byte-identical rows. The
-      // census (the dedup family's 1.5× cut, GRAFT_GRAIN_FORCE
-      // honored) keeps the direct per-doc form on low-replication
-      // corpora where the md5+join detour dedupes nothing. Per-doc
-      // stats (n, avgdl, df) aggregate the fanned-out doc-grain frame
-      // either way — identical values.
+      // census (the dedup family's 1.5× cut) keeps the direct per-doc
+      // form on low-replication corpora where the md5+join detour
+      // dedupes nothing. Per-doc stats (n, avgdl, df) aggregate the
+      // fanned-out doc-grain frame either way — identical values.
       val rawDocs = t(s, dir, "documents").filter(col("text").isNotNull)
       val withTf = (d: org.apache.spark.sql.DataFrame) =>
         allTerms.zipWithIndex.foldLeft(

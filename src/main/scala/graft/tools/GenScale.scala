@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up fixture generator for the SCALE.md crossover measurements
@@ -32,12 +32,7 @@ object GenScale {
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     // optional 4th arg: regenerate only the named tables
     val only = args.drop(3).toSet
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessConf.session(src)
     // events.ts physical encoding varies by fixture vintage
     // (TIMESTAMP(NANOS), timestamp[us] NTZ, ...). Read it raw —
     // nanosAsLong covers the nanos vintage — and write the copy

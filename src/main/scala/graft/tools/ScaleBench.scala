@@ -33,25 +33,12 @@ object ScaleBench {
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else PrefixQueries ++ GatedQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // scale-conditional stability tuning — see HarnessConf
-      .config(graft.tools.HarnessConf.tuning(sfDir))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessConf.session(sfDir)
     PeakHeap.install(spark.sparkContext)
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     def cleanup(): Unit = {
-      PrefixPass.releaseAll()
-      // blocking, so the next measurement never overlaps the previous
-      // run's draining blocks (see Bench.cleanup)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.sharedState.cacheManager.clearCache()
+      HarnessConf.cleanup(spark)
       // deterministic broadcast reclamation (see Bench.cleanup)
       System.gc()
     }
